@@ -24,8 +24,9 @@ object ResponseShaper {
   private val mapper = new ObjectMapper()
 
   /** Sample-mode response built from plan-side aggregates — the caller
-    * passes `df.count()` + schema, so sampling a 10^9-row endpoint
-    * never collects a single row to the driver. */
+    * passes the plan's row count (`PlanCache.count`) + schema, so
+    * sampling a 10^9-row endpoint never collects a single row to the
+    * driver. */
   def sampleJson(rowCount: Long, columns: Seq[String]): String = {
     val out = mapper.createObjectNode()
     out.put("sampled", true)

@@ -1,5 +1,7 @@
 package graft.api
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.config.EndpointConfig
@@ -95,19 +97,28 @@ object TemplatePipeline {
     }
 }
 
-/** Analyzed-plan cache for the serving path (SURVEY §4.2c): repeated
-  * identical requests — dashboards, agent retries, reloads of the same
-  * page — skip SQL parse + analysis, a real slice of the reference's
-  * 12-68 ms interactive budget that Spark otherwise pays per request.
+/** Plan cache for the serving path (SURVEY §4.2c): repeated identical
+  * requests — dashboards, agent retries, reloads of the same page —
+  * skip SQL parse and analysis, and, through the executable views,
+  * optimization, physical and adaptive planning and code generation.
   *
   * Key = (session, generation, rendered SQL, bound args). The rendered
   * text already encodes the Mustache section-presence bitmap
   * (SURVEY §7.4.5: two requests whose sections differ render different
   * SQL), so shape collisions are impossible. `invalidateAll` bumps the
-  * generation — cache-table refreshes and config-API mutations call it,
-  * so a cached plan can never serve against a changed world. Bounded
-  * LRU; DataFrames are lazy plan objects (cheap to hold, thread-safe
-  * to execute).
+  * generation — writes, cache-table refreshes and config-API mutations
+  * call it, so a cached plan can never serve against a changed world.
+  *
+  * Next to each base plan the cache keeps the Datasets the serving path
+  * executes on it — the row-capped read, an offset or keyset page, the
+  * COUNT — under the base key plus a view name. A hit re-executes the
+  * same Dataset, so Spark plans it once; an adaptive plan re-executed
+  * also skips the shuffle stages whose output is still registered (a
+  * COUNT runs only its final stage). A view therefore serves data as
+  * fresh as its entry: the generation bump and the TTL bound both.
+  * Views share their base's generation and TTL and count against the
+  * same LRU bound; a view is served only on the base it was built on,
+  * and leaves the cache when that base expires or is replaced.
   */
 object PlanCache {
   private val MaxEntries = 256
@@ -118,33 +129,135 @@ object PlanCache {
     * dashboards/retries hit, data freshness stays near-real-time. */
   private val TtlMillis = 30000L
   private val generation = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Time source for entry ages; tests move it to expire entries. */
+  @volatile private[api] var clock: () => Long = () => System.currentTimeMillis()
 
   // sessionUUID, not identityHashCode: identity hashes can be reused
   // after a session is GC'd, which would serve a dead session's plan
-  // to a fresh one inside the TTL window
-  private type Key = (String, Long, String, Seq[Any])
-  private final case class Entry(df: DataFrame, builtAt: Long)
+  // to a fresh one inside the TTL window. `view` is Base for the plan
+  // itself, otherwise the name a caller gave its view.
+  private final case class Key(session: String, gen: Long, sql: String, args: Seq[Any], view: Any)
+  private case object Base
+  // `base` is the plan a view was built on (a base plan's own entry
+  // holds itself): a view is served only on that very DataFrame
+  private final case class Entry(df: DataFrame, builtAt: Long, key: Key, base: DataFrame)
   private val cache = new java.util.LinkedHashMap[Key, Entry](64, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[Key, Entry]): Boolean =
       size() > MaxEntries
   }
 
-  /** Drop every cached plan (generation bump — O(1), entries age out). */
-  def invalidateAll(): Unit = generation.incrementAndGet()
+  private val lookups, hits, viewHits, viewBuilds = new java.util.concurrent.atomic.AtomicLong
+
+  /** Counters since start-up; `entries` counts base plans and views. */
+  final case class Stats(lookups: Long, hits: Long, misses: Long, viewHits: Long,
+      viewBuilds: Long, entries: Int) {
+    def toJson: String =
+      s"""{"lookups":$lookups,"hits":$hits,"misses":$misses,"view_hits":$viewHits,""" +
+        s""""view_builds":$viewBuilds,"entries":$entries}"""
+  }
+
+  def stats: Stats = {
+    val (l, h) = (lookups.get(), hits.get())
+    Stats(l, h, l - h, viewHits.get(), viewBuilds.get(), cache.synchronized(cache.size()))
+  }
+
+  /** Drop every cached plan and view. The generation bump keeps a build
+    * already in flight from caching what it read before the change. */
+  def invalidateAll(): Unit = {
+    generation.incrementAndGet()
+    cache.synchronized(cache.clear())
+  }
+
+  private def live(e: Entry, now: Long): Boolean =
+    e.key.gen == generation.get() && now - e.builtAt < TtlMillis
+
+  /** Remove the base plan under `key` and every view of it (caller holds
+    * the lock): executed views pin shuffle output and broadcast blocks. */
+  private def dropPlan(key: Key): Unit =
+    cache.keySet.removeIf(k => k.copy(view = Base) == key)
+
+  /** Cache `e` (caller holds the lock) unless the generation moved on
+    * while it was built. */
+  private def store(e: Entry): Unit =
+    if (e.key.gen == generation.get()) cache.put(e.key, e)
 
   def getOrBuild(spark: SparkSession, sql: String, args: Seq[Any])(
       build: => DataFrame): DataFrame = {
-    val key: Key =
-      (graft.operators.SessionMemo.sessionToken(spark), generation.get(), sql, args)
-    val now = System.currentTimeMillis()
-    cache.synchronized(Option(cache.get(key)).filter(now - _.builtAt < TtlMillis)) match {
-      case Some(e) => e.df
+    val key = Key(graft.operators.SessionMemo.sessionToken(spark), generation.get(), sql, args, Base)
+    val now = clock()
+    lookups.incrementAndGet()
+    cache.synchronized(Option(cache.get(key)).filter(live(_, now))) match {
+      case Some(e) => hits.incrementAndGet(); e.df
       case None =>
         val df = build // analysis outside the lock — it can take ~100 ms
-        cache.synchronized(cache.put(key, Entry(df, now)))
+        // current_timestamp() & co. are fixed when a plan is optimized:
+        // a plan that reads the clock is not cached, so each request
+        // plans it, and reads the clock, afresh
+        if (!readsClock(df)) cache.synchronized {
+          // an expired base goes with its views, and so do views the
+          // LRU kept after it evicted their base
+          dropPlan(key)
+          store(Entry(df, now, key, df))
+        }
         df
     }
   }
+
+  private def readsClock(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirstWithSubqueries {
+      case p if p.containsPattern(org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE) => p
+    }.isDefined
+
+  /** The view `name` of a cached base plan, built by `build` on first
+    * use. A base that is not a live entry (never cached, evicted,
+    * expired, invalidated) gets a fresh, uncached view. */
+  def view(base: DataFrame, name: Any)(build: DataFrame => DataFrame): DataFrame = {
+    val now = clock()
+    val (owner, cached) = cache.synchronized {
+      // an identity scan of at most MaxEntries entries
+      cache.values.asScala.find(e => (e.df eq base) && e.key.view == Base) match {
+        case Some(o) if live(o, now) =>
+          // a view under this key built on an earlier base (expired or
+          // evicted, then rebuilt) is stale: it is rebuilt, not served
+          (Some(o), Option(cache.get(o.key.copy(view = name))).filter(_.base eq base))
+        case Some(o) => dropPlan(o.key); (None, None)
+        case None => (None, None)
+      }
+    }
+    cached match {
+      case Some(v) => viewHits.incrementAndGet(); v.df
+      case None =>
+        viewBuilds.incrementAndGet()
+        val df = build(base)
+        owner.foreach { o =>
+          cache.synchronized(store(Entry(df, o.builtAt, o.key.copy(view = name), base)))
+        }
+        df
+    }
+  }
+
+  def rowCap(base: DataFrame, n: Int): DataFrame = view(base, ("limit", n))(_.limit(n))
+
+  /** The one-row `groupBy().count()` of `base`. */
+  def countView(base: DataFrame): DataFrame = view(base, "count")(_.groupBy().count())
+
+  /** Row count of `base`, through its COUNT view. */
+  def count(base: DataFrame): Long = {
+    val v = countView(base)
+    dropOnFailure(v)(v.collect().head.getLong(0))
+  }
+
+  /** Run `f`, which executes `df`; if it fails, drop `df` from the cache
+    * so no later request re-runs a plan whose execution broke. An I/O
+    * failure (the client went away mid-stream) leaves the plan cached. */
+  def dropOnFailure[T](df: DataFrame)(f: => T): T =
+    try f
+    catch {
+      case e: java.io.IOException => throw e
+      case e: Throwable =>
+        cache.synchronized(cache.values.removeIf(_.df eq df))
+        throw e
+    }
 }
 
 /** Pagination + count envelope (O2/A4; reference database_manager.cpp:
@@ -152,13 +265,15 @@ object PlanCache {
   * LIMIT/OFFSET and runs a companion COUNT on the same plan, emitting
   * `{data, next, total_count}` plus X-Total-Count/X-Offset/X-Limit/X-Next.
   *
-  * Scale notes: the count runs on the UN-limited logical plan — one job,
-  * no re-render, and Catalyst prunes the count plan down to the scan
-  * (columns referenced only in the projection are dropped). The page
-  * itself is offset+limit rows through a single partition — fine for the
-  * first pages (offset defaults 0, limit 100); DEEP pagination must use
-  * keyset instead: `WHERE key > last_seen ORDER BY key LIMIT n` keeps the
-  * scan indexed/pruned at any depth, which is the documented scale path
+  * Page and COUNT are [[PlanCache]] views of the base plan, so a
+  * repeated page re-executes planned Datasets. Scale notes: the count
+  * runs on the UN-limited logical plan — no re-render, and Catalyst
+  * prunes the count plan down to the scan (columns referenced only in
+  * the projection are dropped). The page itself is offset+limit rows
+  * through a single partition — fine for the first pages (offset
+  * defaults 0, limit 100); DEEP pagination must use keyset instead:
+  * `WHERE key > last_seen ORDER BY key LIMIT n` keeps the scan
+  * indexed/pruned at any depth, which is the documented scale path
   * (see keysetPage).
   */
 object Paginator {
@@ -178,15 +293,20 @@ object Paginator {
     (math.max(0L, num("offset", defaultOffset)), math.max(0L, num("limit", defaultLimit)))
   }
 
+  // Dataset.offset/limit take Int; clamp rather than overflow-wrap for
+  // absurd values (deep pagination should use keysetPage regardless).
+  private def asInt(v: Long): Int = math.min(v, Int.MaxValue.toLong).toInt
+
   def paginate(df: DataFrame, offset: Long, limit: Long, basePath: String = ""): Page = {
-    val total = df.count()
-    // Dataset.offset/limit take Int; clamp rather than overflow-wrap for
-    // absurd values (deep pagination should use keysetPage regardless).
-    def asInt(v: Long): Int = math.min(v, Int.MaxValue.toLong).toInt
-    val page = df.offset(asInt(offset)).limit(asInt(limit))
+    val total = PlanCache.count(df)
+    // Spark also rejects LIMIT + OFFSET past Int.MaxValue: the offset
+    // stays exact, the limit takes what is left of the range
+    val off = asInt(offset)
+    val lim = math.min(asInt(limit), Int.MaxValue - off)
+    val page = PlanCache.view(df, ("page", off, lim))(_.offset(off).limit(lim))
+    // `total - offset`, not `offset + limit`: neither side can overflow
     val next =
-      if (offset + limit < total)
-        Some(s"$basePath?offset=${offset + limit}&limit=$limit")
+      if (limit < total - offset) Some(s"$basePath?offset=${offset + limit}&limit=$limit")
       else None
     Page(page, offset, limit, total, next)
   }
@@ -199,10 +319,13 @@ object Paginator {
     * lexicographically — "9" > "10". */
   def keysetPage(df: DataFrame, keyCol: String, lastSeen: Option[Any], limit: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val keyType = df.schema(keyCol).dataType
-    val filtered = lastSeen.fold(df)(v =>
-      df.filter(col(keyCol) > lit(v).cast(keyType)))
-    filtered.orderBy(col(keyCol)).limit(limit.toInt)
+    val lim = asInt(limit)
+    PlanCache.view(df, ("keyset", keyCol, lastSeen, lim)) { base =>
+      val keyType = base.schema(keyCol).dataType
+      val filtered = lastSeen.fold(base)(v =>
+        base.filter(col(keyCol) > lit(v).cast(keyType)))
+      filtered.orderBy(col(keyCol)).limit(lim)
+    }
   }
 
   /** One keyset page + cursor envelope: collects the (limit-bounded)
@@ -220,9 +343,9 @@ object Paginator {
   def keysetPaginate(df: DataFrame, keyCol: String, after: Option[String],
       limit: Long, basePath: String): KeysetPage = {
     val page = keysetPage(df, keyCol, after, limit)
-    val rows = page.collect()
+    val rows = PlanCache.dropOnFailure(page)(page.collect())
     // the count prunes to the scan like the offset path's companion
-    val total = df.count()
+    val total = PlanCache.count(df)
     val next =
       if (rows.length == limit && rows.nonEmpty) {
         val cursor = java.net.URLEncoder.encode(

@@ -122,14 +122,7 @@ final class GraftServer(
   private val rateLimiter = new RateLimiter()
   private val registry = new EndpointRegistry(endpoints)
   private def eps: Seq[ServedEndpoint] = registry.all
-  private val server: HttpServer = tls match {
-    case Some(ctx) =>
-      val s = com.sun.net.httpserver.HttpsServer
-        .create(new InetSocketAddress(host, port), 0)
-      s.setHttpsConfigurator(new com.sun.net.httpserver.HttpsConfigurator(ctx))
-      s
-    case None => HttpServer.create(new InetSocketAddress(host, port), 0)
-  }
+  private val server: HttpServer = GraftServer.listener(host, port, tls)
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -158,7 +151,8 @@ final class GraftServer(
     // the health probe above. scan_budget makes the warn-mode
     // observe-then-flip migration observable without log scraping
     // (r12 verdict #4): a violation counter plus the last violation's
-    // relation/count/mode.
+    // relation/count/mode. plan_cache counts plan lookups and the
+    // executable views served from the cache.
     server.createContext("/mcp/metrics", (ex: HttpExchange) => safely(ex) { e =>
       // monitor_drain_errors: per-monitor failure counters, so a
       // permanently-failing source is observable without log scraping
@@ -166,7 +160,8 @@ final class GraftServer(
         s""","monitor_drain_errors":${m.drainErrorsJson}""").getOrElse("")
       respond(e, 200,
         s"""{"arrow":${graft.serialize.ArrowMetrics.snapshot.toJson},""" +
-          s""""scan_budget":${graft.plans.ScanBudgetRule.Metrics.toJson}""" +
+          s""""scan_budget":${graft.plans.ScanBudgetRule.Metrics.toJson},""" +
+          s""""plan_cache":${PlanCache.stats.toJson}""" +
           monitorErrs + "}",
         "application/json")
     })
@@ -439,7 +434,7 @@ final class GraftServer(
       // The cap is a plan-level GlobalLimit, so Spark also stops reading
       // past it. CSV/Arrow below stream with bounded memory instead.
       case "json" => respond(ex, 200,
-        collectJson(df.limit(wire.defaultRowCap)), "application/json")
+        collectJson(PlanCache.rowCap(df, wire.defaultRowCap)), "application/json")
       case other => respondRaw(ex, df, other)
     }
   }
@@ -613,8 +608,8 @@ final class GraftServer(
             // cache-serving endpoint renders the same view reference
             val df = TemplatePipeline.run(spark, ep.config, ep.template,
               withCacheParams(ep, Map.empty), ep.connProps)
-            val limited = df.limit(ep.shape.maxRows.getOrElse(wire.defaultRowCap))
-            val text = collectJson(limited)
+            val text = collectJson(
+              PlanCache.rowCap(df, ep.shape.maxRows.getOrElse(wire.defaultRowCap)))
             reply(s"""{"contents":[{"uri":${quote(uri)},"mimeType":${quote(ep.config.mcpResource.get.mimeType)},"text":${quote(text)}}]}""")
         }
 
@@ -802,17 +797,18 @@ final class GraftServer(
                     org.apache.spark.sql.types.BinaryType)) {
                 // binary result mime + binary column → typed MCP content
                 // (mcp_content_types.cpp); same plan-level row cap
-                val limited = df.limit(ep.shape.maxRows.getOrElse(wire.defaultRowCap))
+                val limited = PlanCache.rowCap(df, ep.shape.maxRows.getOrElse(wire.defaultRowCap))
+                val rows = PlanCache.dropOnFailure(limited)(limited.collect())
                 reply(s"""{"content":${McpContent.render(
-                  limited.collect().toSeq, limited.schema, mime, toolName(ep))}}""")
+                  rows.toSeq, limited.schema, mime, toolName(ep))}}""")
               } else {
                 val shaped =
                   if (ep.shape.sample)
-                    ResponseShaper.sampleJson(df.count(), df.schema.fieldNames.toSeq)
+                    ResponseShaper.sampleJson(PlanCache.count(df), df.schema.fieldNames.toSeq)
                   else {
                     // no configured maxRows still caps at the wire default —
                     // an unbounded collect is never the default
-                    val limited = df.limit(ep.shape.maxRows.getOrElse(wire.defaultRowCap))
+                    val limited = PlanCache.rowCap(df, ep.shape.maxRows.getOrElse(wire.defaultRowCap))
                     ResponseShaper.shape(collectJson(limited), ep.shape)
                   }
                 reply(s"""{"content":[{"type":"text","text":${quote(shaped)}}]}""")
@@ -831,8 +827,8 @@ final class GraftServer(
   // ---- serialization helpers -------------------------------------------
 
   private def collectJson(df: DataFrame): String = {
-    val schema = df.schema
-    JsonWire.rows(schema, df.collect().iterator).mkString("[", ",", "]")
+    val rows = PlanCache.dropOnFailure(df)(df.collect())
+    JsonWire.rows(df.schema, rows.iterator).mkString("[", ",", "]")
   }
 
   private def negotiate(ex: HttpExchange, query: Map[String, String]): String = {
@@ -849,20 +845,18 @@ final class GraftServer(
   /** CSV/Arrow stream CHUNKED off `toLocalIterator()`: driver memory is
     * bounded by one partition (plus one Arrow batch), never the result —
     * r2 collected the whole result per request. */
-  private def respondRaw(ex: HttpExchange, df: DataFrame, fmt: String): Unit = fmt match {
-    case "csv" =>
-      ex.getResponseHeaders.set("Content-Type", "text/csv")
-      ex.sendResponseHeaders(200, 0) // chunked
-      val os: OutputStream = ex.getResponseBody
-      CsvWire.stream(df.schema, df.toLocalIterator().asScala, os)
-      os.flush()
-    case "arrow" =>
-      ex.getResponseHeaders.set("Content-Type", "application/vnd.apache.arrow.stream")
-      ex.sendResponseHeaders(200, 0) // chunked
-      val os: OutputStream = ex.getResponseBody
-      ArrowWire.stream(df.schema, df.toLocalIterator().asScala, os,
+  private def respondRaw(ex: HttpExchange, df: DataFrame, fmt: String): Unit = {
+    ex.getResponseHeaders.set("Content-Type",
+      if (fmt == "csv") "text/csv" else "application/vnd.apache.arrow.stream")
+    ex.sendResponseHeaders(200, 0) // chunked
+    val os: OutputStream = ex.getResponseBody
+    PlanCache.dropOnFailure(df) {
+      val rows = df.toLocalIterator().asScala
+      if (fmt == "csv") CsvWire.stream(df.schema, rows, os)
+      else ArrowWire.stream(df.schema, rows, os,
         wire.arrowBatchRows, wire.arrowCodec.map(ArrowWire.codecOf))
-      os.flush()
+    }
+    os.flush()
   }
 
   private def respond(ex: HttpExchange, status: Int, body: String, ctype: String): Unit = {
@@ -891,6 +885,25 @@ final class GraftServer(
 }
 
 object GraftServer {
+  /** `com.sun.net.httpserver` writes a response's headers and its body
+    * as two segments. With Nagle's algorithm on, the body waits for the
+    * client's delayed ACK of the headers, ~40 ms on every keep-alive
+    * response. The JDK reads this property once per JVM, when the first
+    * listener of the process is created, so it is set here, before
+    * [[listener]] creates one; a value given on the command line wins. */
+  private val NoDelay = "sun.net.httpserver.nodelay"
+  if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
+
+  private def listener(host: String, port: Int,
+                       tls: Option[javax.net.ssl.SSLContext]): HttpServer = tls match {
+    case Some(ctx) =>
+      val s = com.sun.net.httpserver.HttpsServer
+        .create(new InetSocketAddress(host, port), 0)
+      s.setHttpsConfigurator(new com.sun.net.httpserver.HttpsConfigurator(ctx))
+      s
+    case None => HttpServer.create(new InetSocketAddress(host, port), 0)
+  }
+
   /** Per-principal budget for `graft_*` config tools: they execute
     * SQL and mutate the registry, so they share one metered bucket
     * rather than riding unmetered past the per-endpoint limits. */

@@ -104,6 +104,12 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     "SELECT c_custkey, c_name FROM read_parquet('{{conn.path}}')",
     connProps = Map("path" -> "/root/testdata/sf0.001/customer.parquet"))
 
+  /** A template that reads the clock: every request must see its own time. */
+  private val clockEndpoint = ServedEndpoint(
+    EndpointConfig(urlPath = "/clock", templateSource = "clock.sql",
+      withPagination = false, requestFieldsValidation = false),
+    "SELECT CAST(current_timestamp() AS STRING) AS ts")
+
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
       .master("local[2]").appName("server-spec")
@@ -123,7 +129,7 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     if (bigwLoc.exists()) bigwLoc.listFiles().foreach(_.delete())
     server = new GraftServer(spark,
       Seq(customersEndpoint, byIdEndpoint, writeEndpoint, bigEndpoint,
-        bigSampleEndpoint, bigWriteEndpoint, keysetEndpoint),
+        bigSampleEndpoint, bigWriteEndpoint, keysetEndpoint, clockEndpoint),
       wire = WireConfig(defaultRowCap = 7, arrowBatchRows = 1000,
         arrowCodec = Some("zstd"))).start()
     base = s"http://127.0.0.1:${server.boundPort}"
@@ -257,6 +263,48 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(j.get(0).get("name").asText() == "row-0")
   }
 
+  test("a template that reads the clock serves each request its own time") {
+    def csv(): String = get("/clock?format=csv").body().linesIterator.drop(1).next()
+    def json(): String = mapper.readTree(get("/clock").body()).get(0).get("ts").asText()
+    val c1 = csv(); Thread.sleep(1100); val c2 = csv()
+    assert(c1 != c2, s"CSV served one time twice: $c1")
+    val j1 = json(); Thread.sleep(1100); val j2 = json()
+    assert(j1 != j2, s"JSON served one time twice: $j1")
+  }
+
+  test("a keyset limit past Int.MaxValue is clamped, not wrapped negative") {
+    val r = get("/kcustomers?limit=3000000000")
+    assert(r.statusCode() == 200, r.body())
+    val j = mapper.readTree(r.body())
+    assert(j.get("data").size() == j.get("total_count").asInt())
+    assert(j.get("next").isNull)
+  }
+
+  test("an offset near Long.MaxValue gives an empty last page, not a negative next") {
+    val r = get("/customers?offset=9223372036854775800&limit=100")
+    assert(r.statusCode() == 200, r.body())
+    val j = mapper.readTree(r.body())
+    assert(j.get("data").size() == 0 && j.get("total_count").asLong() == 4L)
+    assert(j.get("next").isNull, r.body())
+    assert(r.headers().firstValue("X-Next").isEmpty)
+    // a huge limit after a real offset keeps the offset exact
+    val j2 = mapper.readTree(get("/customers?offset=1&limit=3000000000").body())
+    assert(j2.get("data").size() == 3 && j2.get("data").get(0).get("key").asLong() == 2L)
+  }
+
+  test("metrics probe counts plan-cache hits and view hits") {
+    def planCache() = mapper.readTree(get("/mcp/metrics").body()).get("plan_cache")
+    get("/customers?limit=3&offset=1")
+    val before = planCache()
+    get("/customers?limit=3&offset=1")
+    val after = planCache()
+    for (k <- Seq("lookups", "hits", "misses", "view_hits", "view_builds", "entries"))
+      assert(after.has(k), s"plan_cache lacks $k: $after")
+    assert(after.get("hits").asLong() > before.get("hits").asLong(), s"$before -> $after")
+    assert(after.get("view_hits").asLong() >= before.get("view_hits").asLong() + 2,
+      s"$before -> $after")
+  }
+
   test("CSV streams the FULL un-capped result chunked") {
     val r = get("/big?format=csv")
     assert(r.statusCode() == 200)
@@ -350,6 +398,23 @@ class ServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val j = mapper.readTree(r.body())
     assert(j.get("rows_affected").asLong() == 5L)
     assert(j.get("data").size() == 7) // 50 000-row trailing SELECT, cap 7
+  }
+
+  test("keep-alive responses do not wait out the client's delayed ACK") {
+    // headers and body leave as two segments: without TCP_NODELAY every
+    // response waits ~40 ms for the client's delayed ACK of the first
+    assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+    val keepAlive = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(URI.create(base + "/mcp/health")).build()
+    def timed(): Double = {
+      val t0 = System.nanoTime()
+      assert(keepAlive.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+      (System.nanoTime() - t0) / 1e6
+    }
+    (1 to 3).foreach(_ => timed()) // connection set-up and warm-up
+    val ms = (1 to 20).map(_ => timed()).sorted
+    val median = (ms(9) + ms(10)) / 2
+    assert(median < 20.0, s"median ${median} ms over ${ms.mkString(", ")}")
   }
 
   test("MCP health probe reports liveness and entity counts") {
