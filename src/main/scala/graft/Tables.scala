@@ -47,8 +47,9 @@ object Tables {
         // sure nanos-timestamp parquet (events.ts) is readable in it too.
         try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         catch { case _: org.apache.spark.sql.AnalysisException => () }
-        // and that graft's functions resolve even without our extensions
-        graft.functions.GraftFunctions.ensureRegistered(spark)
+        // and that graft's native functions resolve on a session built
+        // without GraftFunctions.register
+        graft.functions.GraftFunctions.install(spark)
         names.foreach { n =>
           val p = s"$dir/$n.parquet"
           if (new java.io.File(p).exists() || dir.contains("://")) {

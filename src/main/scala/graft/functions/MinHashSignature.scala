@@ -1,12 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.types._
+
+import graft.plans.ScanBudgetRule
 
 /** `minhash_sig(shingles[, k])` — the k-permutation MinHash signature
   * of a string array, as a native Catalyst expression.
@@ -66,20 +68,19 @@ case class MinHashSignature(child: Expression, numHashes: Int)
   override def prettyName: String = "minhash_sig"
 }
 
-/** SparkSessionExtensions hook registering graft's native functions —
-  * wire with `SparkSession.builder().withExtensions(GraftFunctions.register)`.
-  *
-  * [[ensureRegistered]] is the belt-and-braces path for sessions built
-  * WITHOUT the extension (e.g. a harness-owned session): it detects
-  * the missing function and registers UDF equivalents under the same
-  * names. The UDFs compute identical values (same hash loops) at
-  * somewhat higher per-row cost (serialization), so the expression
-  * path remains the default.
+/** graft's native functions, one row per SQL name in [[kernels]]. Two
+  * entry points read the table, so every session runs the same
+  * Catalyst expressions whichever way it was built:
+  *  - [[register]], the `SparkSessionExtensions` hook — wire with
+  *    `SparkSession.builder().withExtensions(GraftFunctions.register)`;
+  *  - [[install]], for a live session built without it (a harness-owned
+  *    session, or one handed to `GraftBootstrap.serve`).
   */
 object GraftFunctions {
   val DefaultNumHashes = 72
 
-  /** Plain-JVM minhash over string shingles (shared by the UDF path). */
+  /** Plain-JVM minhash over string shingles: the reference the
+    * `minhash_sig` expression is property-checked against. */
   def minhashPlain(shingles: Seq[String], k: Int): Array[Long] = {
     val mins = Array.fill(k)(Long.MaxValue)
     shingles.foreach { s =>
@@ -97,387 +98,6 @@ object GraftFunctions {
     mins
   }
 
-  final case class WinnowOut(n_fp: Long, min_fp: Long, max_fp: Long)
-  final case class BloomOut(n_grams: Long, n_bloom: Long, n_exact: Long)
-  final case class QuantOut(qmin: Double, qmax: Double, qsum: Long, recon_cos: Double)
-  final case class TermCountOut(t: String, c: Long)
-  final case class ImgOut(ok: Boolean, width: Int, height: Int, mean_luma: Double)
-  final case class PngOut(ok: Boolean, width: Int, height: Int, bit_depth: Int,
-    color_type: Int, interlace: Int, chunks: String, crc_ok: Boolean)
-  final case class Mp4Out(ok: Boolean, brand: String, timescale: Long, duration: Long,
-    n_tracks: Int, width: Int, height: Int, codec: String)
-  final case class WavOut(ok: Boolean, channels: Int, sample_rate: Int, bits: Int,
-    n_samples: Long, sum_samples: Long, peak_abs: Long)
-  final case class AviOut(ok: Boolean, width: Int, height: Int, n_frames: Long,
-    f0_luma: Double, flast_luma: Double)
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val present =
-      try { spark.sql("SELECT minhash_sig(array('x'), 2)").collect(); true }
-      catch { case _: Exception => false }
-    if (!present) {
-      spark.udf.register("minhash_sig",
-        (sh: Seq[String], k: Int) => minhashPlain(sh, k).toSeq)
-      spark.udf.register("word_shingles", (text: String, n: Int) => {
-        require(n >= 1, "word_shingles: n must be >= 1") // same contract as the native kernel
-        if (text == null) null
-        else {
-          val words = text.split(" ", -1)
-          (0 to words.length - n).map(i => words.slice(i, i + n).mkString(" "))
-        }
-      })
-      spark.udf.register("simhash32", (tokens: Seq[String]) => {
-        val weights = new Array[Long](32)
-        tokens.foreach { t =>
-          if (t != null) {
-            val h = Md5Prefix.hash(t.getBytes("UTF-8"))
-            var b = 0
-            while (b < 32) {
-              if (((h >> b) & 1L) == 1L) weights(b) += 1 else weights(b) -= 1
-              b += 1
-            }
-          }
-        }
-        var fp = 0L; var b = 0
-        while (b < 32) { if (weights(b) > 0) fp |= (1L << b); b += 1 }
-        fp
-      })
-      spark.udf.register("dot_f64",
-        (a: Seq[java.lang.Double], b: Seq[java.lang.Double]) => {
-          // same NULL semantics as the expression: null element or
-          // length mismatch → NULL
-          if (a == null || b == null || a.length != b.length ||
-              a.exists(_ == null) || b.exists(_ == null)) null
-          else {
-            var acc = 0.0; var i = 0
-            while (i < a.length) { acc += a(i) * b(i); i += 1 }
-            java.lang.Double.valueOf(acc)
-          }
-        })
-      spark.udf.register("pq_code_u6",
-        (sub: Seq[java.lang.Double], books: Seq[Seq[java.lang.Double]],
-            c2: Seq[java.lang.Double]) => {
-          // same exact-rounded argmin as the native expression
-          if (sub == null || books == null || c2 == null ||
-              sub.exists(_ == null)) null
-          else {
-            val xs = sub.map(_.doubleValue()).toArray
-            val scaled = books.indices.map { ci =>
-              var dot = 0.0; var d = 0
-              val cv = books(ci)
-              while (d < xs.length) { dot += xs(d) * cv(d); d += 1 }
-              (c2(ci) - 2.0 * dot) * 1000000.0
-            }
-            val minRaw = scaled.min
-            java.lang.Integer.valueOf(
-              scaled.indices.filter(scaled(_) <= minRaw + 1.0)
-                .map(ci => (java.math.BigDecimal.valueOf(scaled(ci))
-                  .setScale(0, java.math.RoundingMode.HALF_UP)
-                  .doubleValue().toLong, ci)).min._2)
-          }
-        })
-      spark.udf.register("tokens_in_set",
-        // Option return: NULL tokens array must yield NULL like the
-        // native expression (a bare Seq param NPEs on null input)
-        (tokens: Seq[String], markers: Seq[String]) =>
-          if (tokens == null || markers == null) None
-          else {
-            val set = markers.filter(_ != null).toSet
-            Some(tokens.count(t => t != null && set.contains(t)))
-          })
-      spark.udf.register("quantize_u8", (v: Seq[java.lang.Double]) =>
-        if (v == null || v.isEmpty || v.exists(_ == null)) None
-        else {
-          var lo = Double.MaxValue; var hi = Double.MinValue
-          v.foreach { d => if (d < lo) lo = d; if (d > hi) hi = d }
-          if (!(hi > lo)) None
-          else {
-            val range = hi - lo
-            var qsum = 0L; var dot = 0.0; var nv = 0.0; var nr = 0.0
-            v.foreach { d =>
-              // exact half-away-from-zero (see VectorOps.QuantizeU8):
-              // floor(t+0.5) mis-rounds when the add carries over half
-              val t = (d - lo) / range * 255
-              val tf = math.floor(t)
-              val c = if (t - tf >= 0.5) tf + 1 else tf
-              qsum += c.toLong
-              val r = lo + c * range / 255
-              dot += d * r; nv += d * d; nr += r * r
-            }
-            Some(QuantOut(lo, hi, qsum, dot / (math.sqrt(nv) * math.sqrt(nr))))
-          }
-        })
-      spark.udf.register("cdc_bounds", (text: String) =>
-        if (text == null) null
-        else {
-          val l = text.length
-          val out = scala.collection.mutable.ArrayBuffer(1)
-          var i = 2
-          while (i <= l - 3) {
-            if (Md5Prefix.hash(text.substring(i - 1, i + 3).getBytes("UTF-8")) % 64 == 0)
-              out += i
-            i += 1
-          }
-          out += l + 1
-          out.toSeq
-        })
-      spark.udf.register("winnow_digest", (text: String) => {
-        val (k, w) = (5, 4)
-        val n = text.length - k + 1
-        if (n <= 0) WinnowOut(0L, 0L, 0L)
-        else {
-          val hashes = Array.tabulate(n)(i =>
-            Md5Prefix.hash(text.substring(i, i + k).getBytes("UTF-8")))
-          val seen = new java.util.HashSet[Long]()
-          var minFp = Long.MaxValue; var maxFp = Long.MinValue
-          var i = 0
-          while (i < n) {
-            var m = Long.MaxValue
-            var j = i; val end = math.min(i + w, n)
-            while (j < end) { if (hashes(j) < m) m = hashes(j); j += 1 }
-            if (seen.add(m)) {
-              if (m < minFp) minFp = m
-              if (m > maxFp) maxFp = m
-            }
-            i += 1
-          }
-          WinnowOut(seen.size.toLong, minFp, maxFp)
-        }
-      })
-      spark.udf.register("bucket_counts", (tokens: Seq[String], m: Int) => {
-        val counts = new Array[Long](m)
-        tokens.foreach { t =>
-          if (t != null) counts((Md5Prefix.hash(t.getBytes("UTF-8")) % m).toInt) += 1
-        }
-        counts.toSeq
-      })
-      spark.udf.register("bloom_doc_stats",
-        (grams: Seq[String], bitmap: Seq[Long], ref: Seq[String]) => {
-          val bits = bitmap.toArray
-          val mBits = bits.length * 64
-          val refSet = new java.util.HashSet[String]()
-          ref.foreach(refSet.add)
-          val seen = new java.util.HashSet[String]()
-          var nBloom = 0L; var nExact = 0L
-          grams.foreach { g =>
-            if (g != null && seen.add(g)) {
-              val (w1, w2) = Md5Prefix.hash2(g.getBytes("UTF-8"))
-              val p1 = (w1 % mBits).toInt; val p2 = (w2 % mBits).toInt
-              if (((bits(p1 >> 6) >>> (p1 & 63)) & 1L) == 1L &&
-                  ((bits(p2 >> 6) >>> (p2 & 63)) & 1L) == 1L) nBloom += 1
-              if (refSet.contains(g)) nExact += 1
-            }
-          }
-          BloomOut(seen.size.toLong, nBloom, nExact)
-        })
-      spark.udf.register("pair_pack", (ps: Seq[java.lang.Long]) =>
-        if (ps == null || ps.exists(_ == null)) null
-        else {
-          val n = ps.length
-          val out = new Array[Long](n * (n - 1) / 2)
-          var k = 0; var i = 0
-          while (i < n) {
-            val hi = ps(i).longValue() << 32
-            var j = i + 1
-            while (j < n) { out(k) = hi | ps(j).longValue(); k += 1; j += 1 }
-            i += 1
-          }
-          out.toSeq
-        })
-      spark.udf.register("term_counts", (toks: Seq[String]) =>
-        if (toks == null) null
-        else toks.groupBy(identity).toSeq
-          .map { case (t, g) => TermCountOut(t, g.length.toLong) }
-          .sortBy(_.t))
-      // media-kernel fallbacks: same MediaKernels code as the
-      // expressions, re-wrapped as case-class results
-      spark.udf.register("synthetic_png",
-        (id: Long) => graft.multimodal.MediaKernels.syntheticPng(id))
-      spark.udf.register("synthetic_avi",
-        (id: Long) => graft.multimodal.MediaKernels.syntheticAvi(id))
-      spark.udf.register("synthetic_wav",
-        (id: Long) => graft.multimodal.MediaKernels.syntheticWav(id))
-      spark.udf.register("synthetic_mp4",
-        (id: Long) => graft.multimodal.MediaKernels.syntheticMp4(id))
-      spark.udf.register("decode_image", (b: Array[Byte]) => {
-        val f = graft.multimodal.MediaKernels.decodeImage(Seq((0L, b))).head
-        ImgOut(f.ok, f.width, f.height, f.meanLuma)
-      })
-      spark.udf.register("probe_png", (b: Array[Byte]) =>
-        graft.multimodal.MediaKernels.probePng(b) match {
-          case Some(p) => PngOut(true, p.width, p.height, p.bitDepth,
-            p.colorType, p.interlace, p.chunks, p.crcOk)
-          case None => PngOut(false, -1, -1, -1, -1, -1, "", false)
-        })
-      spark.udf.register("probe_mp4", (b: Array[Byte]) =>
-        (try graft.multimodal.MediaKernels.probeMp4(b)
-         catch { case _: Exception => None }) match {
-          case Some(p) => Mp4Out(true, p.brand, p.timescale, p.duration,
-            p.nTracks, p.width, p.height, p.codec)
-          case None => Mp4Out(false, "", -1L, -1L, -1, -1, -1, "")
-        })
-      spark.udf.register("analyze_wav", (b: Array[Byte]) => {
-        val a = graft.multimodal.MediaKernels.analyzeWav(Seq((0L, b))).head
-        WavOut(a.ok, a.channels, a.sampleRate, a.bitsPerSample,
-          a.nSamples, a.sumSamples, a.peakAbs)
-      })
-      spark.udf.register("avi_frame_lumas", (b: Array[Byte]) => {
-        val vf = graft.multimodal.MediaKernels
-          .sampleAviFrames(Seq((0L, b)), n = 2).head
-        if (!vf.ok || vf.frames.isEmpty) AviOut(false, -1, -1, -1L, -1.0, -1.0)
-        else {
-          def luma(fb: Array[Byte]): Double =
-            graft.multimodal.MediaKernels.decodeImage(Seq((0L, fb))).head.meanLuma
-          AviOut(true, vf.width, vf.height, vf.nFrames.toLong,
-            luma(vf.frames.head), luma(vf.frames.last))
-        }
-      })
-    }
-  }
-
-  def register(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => {
-        val k = if (exprs.size > 1)
-          exprs(1).eval().asInstanceOf[Number].intValue()
-        else DefaultNumHashes
-        MinHashSignature(exprs.head, k)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("winnow_digest"),
-      new ExpressionInfo(classOf[WinnowDigest].getName, "winnow_digest"),
-      (exprs: Seq[Expression]) => WinnowDigest(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimHash32].getName, "simhash32"),
-      (exprs: Seq[Expression]) => SimHash32(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_f64"),
-      new ExpressionInfo(classOf[DotF64].getName, "dot_f64"),
-      (exprs: Seq[Expression]) => DotF64(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("pq_code_u6"),
-      new ExpressionInfo(classOf[PqCodeU6].getName, "pq_code_u6"),
-      (exprs: Seq[Expression]) => PqCodeU6(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("tokens_in_set"),
-      new ExpressionInfo(classOf[TokensInSet].getName, "tokens_in_set"),
-      (exprs: Seq[Expression]) => TokensInSet(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("quantize_u8"),
-      new ExpressionInfo(classOf[QuantizeU8].getName, "quantize_u8"),
-      (exprs: Seq[Expression]) => QuantizeU8(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("cdc_bounds"),
-      new ExpressionInfo(classOf[CdcBounds].getName, "cdc_bounds"),
-      (exprs: Seq[Expression]) => CdcBounds(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("pair_pack"),
-      new ExpressionInfo(classOf[PairPack].getName, "pair_pack"),
-      (exprs: Seq[Expression]) => PairPack(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("term_counts"),
-      new ExpressionInfo(classOf[TermCounts].getName, "term_counts"),
-      (exprs: Seq[Expression]) => TermCounts(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("bucket_counts"),
-      new ExpressionInfo(classOf[BucketCounts].getName, "bucket_counts"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "bucket_counts(tokens, m) takes exactly 2 arguments")
-        val m = exprs(1).eval() match {
-          case num: Number => num.intValue()
-          case other => throw new IllegalArgumentException(
-            s"bucket_counts: m must be an integer literal, got $other")
-        }
-        BucketCounts(exprs.head, m)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_doc_stats"),
-      new ExpressionInfo(classOf[BloomDocStats].getName, "bloom_doc_stats"),
-      (exprs: Seq[Expression]) => BloomDocStats(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "word_shingles(text, n) takes exactly 2 arguments")
-        val n = exprs(1).eval() match {
-          case num: Number => num.intValue()
-          case other => throw new IllegalArgumentException(
-            s"word_shingles: n must be an integer literal, got $other")
-        }
-        WordShingles(exprs.head, n)
-      }))
-    // InternalRow-level media kernels (r15): synthesis + probe/decode
-    // expressions replacing the multimodal family's typed-Dataset
-    // mapPartitions boundary — see graft.functions.MediaExprs
-    Seq("png", "avi", "wav", "mp4").foreach { kind =>
-      ext.injectFunction((
-        new FunctionIdentifier(s"synthetic_$kind"),
-        new ExpressionInfo(classOf[SyntheticMedia].getName, s"synthetic_$kind"),
-        (exprs: Seq[Expression]) => SyntheticMedia(exprs.head, kind)))
-    }
-    ext.injectFunction((
-      new FunctionIdentifier("decode_image"),
-      new ExpressionInfo(classOf[DecodeImageExpr].getName, "decode_image"),
-      (exprs: Seq[Expression]) => DecodeImageExpr(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("probe_png"),
-      new ExpressionInfo(classOf[ProbePngExpr].getName, "probe_png"),
-      (exprs: Seq[Expression]) => ProbePngExpr(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("probe_mp4"),
-      new ExpressionInfo(classOf[ProbeMp4Expr].getName, "probe_mp4"),
-      (exprs: Seq[Expression]) => ProbeMp4Expr(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("analyze_wav"),
-      new ExpressionInfo(classOf[AnalyzeWavExpr].getName, "analyze_wav"),
-      (exprs: Seq[Expression]) => AnalyzeWavExpr(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("avi_frame_lumas"),
-      new ExpressionInfo(classOf[AviFrameLumasExpr].getName, "avi_frame_lumas"),
-      (exprs: Seq[Expression]) => AviFrameLumasExpr(exprs.head)))
-    ext.injectFunction(mgTopkRegistration)
-    ext.injectFunction(qdigestRegistration)
-    ext.injectFunction(qdigestMergeRegistration)
-    // the duplicated-scan guard (conf-gated, default off) — see
-    // graft.plans.ScanBudgetRule; user-provided rules run after the
-    // built-in optimizer batches, i.e. after CTE inlining
-    ext.injectOptimizerRule(_ => graft.plans.ScanBudgetRule)
-  }
-
-  private val mgTopkBuilder: Seq[Expression] => Expression =
-    (exprs: Seq[Expression]) => {
-      require(exprs.size == 2, "mg_topk(term, k) takes exactly 2 arguments")
-      val k = exprs(1) match {
-        case e if e.foldable => e.eval() match {
-          case num: Number => num.intValue()
-          case other => throw new IllegalArgumentException(
-            s"mg_topk: k must be an integer literal, got $other")
-        }
-        case other => throw new IllegalArgumentException(
-          s"mg_topk: k must be an integer literal, got ${other.sql}")
-      }
-      MisraGriesTopK(exprs.head, k).toAggregateExpression()
-    }
-
-  private def mgTopkRegistration = (
-    new FunctionIdentifier("mg_topk"),
-    new ExpressionInfo(classOf[MisraGriesTopK].getName, "mg_topk"),
-    mgTopkBuilder)
-
-  /** Register mg_topk directly into a session's function registry —
-    * the foreachBatch path: micro-batch CLONE sessions do not carry
-    * extension-injected functions (unlike UDF registrations), so the
-    * streaming MG summary registers the aggregate explicitly on the
-    * batch session before aggregating. Idempotent. */
-  def ensureMgTopk(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val (id, info, builder) = mgTopkRegistration
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-  }
-
   private def intLit(e: Expression, fn: String, arg: String): Int = e match {
     case x if x.foldable => x.eval() match {
       case num: Number => num.intValue()
@@ -488,41 +108,80 @@ object GraftFunctions {
       s"$fn: $arg must be an integer literal, got ${other.sql}")
   }
 
-  private val qdigestBuilder: Seq[Expression] => Expression =
-    (exprs: Seq[Expression]) => {
-      require(exprs.size == 3, "qdigest(value, k, b) takes exactly 3 arguments")
-      QDigestAgg(exprs.head,
-        intLit(exprs(1), "qdigest", "k"),
-        intLit(exprs(2), "qdigest", "b")).toAggregateExpression()
-    }
+  private def kernel(name: String, cls: Class[_])(
+      build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
 
-  private def qdigestRegistration = (
-    new FunctionIdentifier("qdigest"),
-    new ExpressionInfo(classOf[QDigestAgg].getName, "qdigest"),
-    qdigestBuilder)
+  val kernels: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    kernel("minhash_sig", classOf[MinHashSignature])(e => MinHashSignature(e.head,
+      if (e.size > 1) intLit(e(1), "minhash_sig", "k") else DefaultNumHashes)),
+    kernel("winnow_digest", classOf[WinnowDigest])(e => WinnowDigest(e.head)),
+    kernel("simhash32", classOf[SimHash32])(e => SimHash32(e.head)),
+    kernel("dot_f64", classOf[DotF64])(e => DotF64(e(0), e(1))),
+    kernel("pq_code_u6", classOf[PqCodeU6])(e => PqCodeU6(e(0), e(1), e(2))),
+    kernel("tokens_in_set", classOf[TokensInSet])(e => TokensInSet(e(0), e(1))),
+    kernel("quantize_u8", classOf[QuantizeU8])(e => QuantizeU8(e.head)),
+    kernel("cdc_bounds", classOf[CdcBounds])(e => CdcBounds(e.head)),
+    kernel("pair_pack", classOf[PairPack])(e => PairPack(e.head)),
+    kernel("term_counts", classOf[TermCounts])(e => TermCounts(e.head)),
+    kernel("bucket_counts", classOf[BucketCounts]) { e =>
+      require(e.size == 2, "bucket_counts(tokens, m) takes exactly 2 arguments")
+      BucketCounts(e.head, intLit(e(1), "bucket_counts", "m"))
+    },
+    kernel("bloom_doc_stats", classOf[BloomDocStats])(e =>
+      BloomDocStats(e(0), e(1), e(2))),
+    kernel("word_shingles", classOf[WordShingles]) { e =>
+      require(e.size == 2, "word_shingles(text, n) takes exactly 2 arguments")
+      WordShingles(e.head, intLit(e(1), "word_shingles", "n"))
+    },
+    // InternalRow-level media kernels: synthesis + probe/decode — see
+    // graft.functions.MediaExprs
+    kernel("synthetic_png", classOf[SyntheticMedia])(e => SyntheticMedia(e.head, "png")),
+    kernel("synthetic_avi", classOf[SyntheticMedia])(e => SyntheticMedia(e.head, "avi")),
+    kernel("synthetic_wav", classOf[SyntheticMedia])(e => SyntheticMedia(e.head, "wav")),
+    kernel("synthetic_mp4", classOf[SyntheticMedia])(e => SyntheticMedia(e.head, "mp4")),
+    kernel("decode_image", classOf[DecodeImageExpr])(e => DecodeImageExpr(e.head)),
+    kernel("probe_png", classOf[ProbePngExpr])(e => ProbePngExpr(e.head)),
+    kernel("probe_mp4", classOf[ProbeMp4Expr])(e => ProbeMp4Expr(e.head)),
+    kernel("analyze_wav", classOf[AnalyzeWavExpr])(e => AnalyzeWavExpr(e.head)),
+    kernel("avi_frame_lumas", classOf[AviFrameLumasExpr])(e => AviFrameLumasExpr(e.head)),
+    // native aggregates
+    kernel("mg_topk", classOf[MisraGriesTopK]) { e =>
+      require(e.size == 2, "mg_topk(term, k) takes exactly 2 arguments")
+      MisraGriesTopK(e.head, intLit(e(1), "mg_topk", "k")).toAggregateExpression()
+    },
+    kernel("qdigest", classOf[QDigestAgg]) { e =>
+      require(e.size == 3, "qdigest(value, k, b) takes exactly 3 arguments")
+      QDigestAgg(e.head, intLit(e(1), "qdigest", "k"),
+        intLit(e(2), "qdigest", "b")).toAggregateExpression()
+    },
+    kernel("qdigest_merge", classOf[QDigestMergeAgg]) { e =>
+      require(e.size == 3, "qdigest_merge(digest, k, b) takes exactly 3 arguments")
+      QDigestMergeAgg(e.head, intLit(e(1), "qdigest_merge", "k"),
+        intLit(e(2), "qdigest_merge", "b")).toAggregateExpression()
+    })
 
-  private val qdigestMergeBuilder: Seq[Expression] => Expression =
-    (exprs: Seq[Expression]) => {
-      require(exprs.size == 3,
-        "qdigest_merge(digest, k, b) takes exactly 3 arguments")
-      QDigestMergeAgg(exprs.head,
-        intLit(exprs(1), "qdigest_merge", "k"),
-        intLit(exprs(2), "qdigest_merge", "b")).toAggregateExpression()
-    }
+  def register(ext: SparkSessionExtensions): Unit = {
+    kernels.foreach(ext.injectFunction)
+    // the duplicated-scan guard (conf-gated) — see
+    // graft.plans.ScanBudgetRule; user-provided rules run after the
+    // built-in optimizer batches, i.e. after CTE inlining
+    ext.injectOptimizerRule(_ => ScanBudgetRule)
+  }
 
-  private def qdigestMergeRegistration = (
-    new FunctionIdentifier("qdigest_merge"),
-    new ExpressionInfo(classOf[QDigestMergeAgg].getName, "qdigest_merge"),
-    qdigestMergeBuilder)
-
-  /** Clone-session registration for qdigest + qdigest_merge — the
-    * ensureMgTopk discipline for the second native-aggregate family.
-    * Idempotent. */
-  def ensureQdigest(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    Seq(qdigestRegistration, qdigestMergeRegistration).foreach {
-      case (id, info, builder) =>
-        if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
+  /** Give a live session what [[register]] gives a new one: every row
+    * of [[kernels]] in its function registry, and ScanBudgetRule through
+    * `experimental.extraOptimizations`. A session that already resolves
+    * the kernels — built with the extension, whose rule is then already
+    * there, or installed before — is left as it is, so the rule never
+    * runs twice. Idempotent; runs no query. */
+  def install(spark: SparkSession): Unit = synchronized {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(kernels.head._1)) {
+      kernels.foreach { case (id, info, build) =>
+        registry.registerFunction(id, info, build)
+      }
+      spark.experimental.extraOptimizations :+= ScanBudgetRule
     }
   }
 }

@@ -308,9 +308,10 @@ case class WordShingles(child: Expression, n: Int)
   * `flatten(transform(ps, (x, i) -> transform(slice(...), ...)))`,
   * whose per-pair interpreted-lambda dispatch (the word_shingles /
   * cdc_bounds defect class) costs more than the pairing itself on
-  * ~10⁶ pairs. Valid iff every element < 2^31 (the caller gates on the
-  * partkey-cardinality probe); sorted input ⇒ packed order ==
-  * (pa, pb) lexicographic order, so downstream tiebreaks are exact. */
+  * ~10⁶ pairs. Valid iff every element is in [0, 2^31) (the caller
+  * gates on the partkey range); sorted input ⇒ packed order ==
+  * (pa, pb) lexicographic order, so downstream tiebreaks are exact.
+  * NULL elements are skipped, as in minhash_sig. */
 case class PairPack(child: Expression)
     extends UnaryExpression with CodegenFallback {
 
@@ -323,15 +324,21 @@ case class PairPack(child: Expression)
 
   override protected def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
+    val ps = new Array[Long](arr.numElements())
+    var n = 0
+    var i = 0
+    while (i < ps.length) {
+      if (!arr.isNullAt(i)) { ps(n) = arr.getLong(i); n += 1 }
+      i += 1
+    }
     val out = new Array[Long](n * (n - 1) / 2)
     var k = 0
-    var i = 0
+    i = 0
     while (i < n) {
-      val hi = arr.getLong(i) << 32
+      val hi = ps(i) << 32
       var j = i + 1
       while (j < n) {
-        out(k) = hi | arr.getLong(j)
+        out(k) = hi | ps(j)
         k += 1
         j += 1
       }
@@ -353,9 +360,10 @@ case class PairPack(child: Expression)
   * `groupBy(doc_id, term).count()` exchange it replaces disappears
   * entirely — only already-collapsed per-doc rows ever leave the map
   * side (r15, guide §2.4). Empty-string tokens count like any other
-  * (matching `explode(split(...))` + GROUP BY, which keeps them).
-  * Output order is the binary UTF8 sort order of the terms — callers
-  * aggregate or max over it, so the order is never semantic. */
+  * (matching `explode(split(...))` + GROUP BY, which keeps them); NULL
+  * elements are skipped, as in minhash_sig. Output order is the binary
+  * UTF8 sort order of the terms — callers aggregate or max over it, so
+  * the order is never semantic. */
 case class TermCounts(child: Expression)
     extends UnaryExpression with CodegenFallback {
 
@@ -372,13 +380,16 @@ case class TermCounts(child: Expression)
 
   override protected def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
+    val toks = new Array[UTF8String](arr.numElements())
+    var n = 0
+    var i = 0
+    while (i < toks.length) {
+      if (!arr.isNullAt(i)) { toks(n) = arr.getUTF8String(i); n += 1 }
+      i += 1
+    }
     if (n == 0)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-    val toks = new Array[UTF8String](n)
-    var i = 0
-    while (i < n) { toks(i) = arr.getUTF8String(i); i += 1 }
-    java.util.Arrays.sort(toks, (a: UTF8String, b: UTF8String) => a.compareTo(b))
+    java.util.Arrays.sort(toks, 0, n, (a: UTF8String, b: UTF8String) => a.compareTo(b))
     val out = new java.util.ArrayList[Any](math.min(n, 16))
     var runStart = 0
     i = 1

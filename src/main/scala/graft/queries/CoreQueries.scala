@@ -573,8 +573,11 @@ object CoreQueries extends QuerySet {
       // in-row pair expansion, one Generate; slice's over-long length
       // clamp is its documented behavior (start i+2 is 1-based = the
       // elements after 0-based position i)
+      // pair_pack is exact iff every key k has 0 <= k < 2^31
       val packable = partkeysPackable.getOrElseUpdate(s, dir) {
-        Tables.table(s, dir, "part").count() < (1L << 31)
+        val r = Tables.table(s, dir, "part")
+          .agg(min("p_partkey").cast("long"), max("p_partkey").cast("long")).head()
+        !r.isNullAt(0) && r.getLong(0) >= 0 && r.getLong(1) < (1L << 31)
       }
       if (packable) {
         sets

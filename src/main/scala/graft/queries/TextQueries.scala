@@ -2513,7 +2513,6 @@ object TextQueries extends QuerySet {
            |FROM d JOIN ord ON ord.rk = (d.decile * ord.n + 9) // 10
            |GROUP BY d.decile ORDER BY d.decile""".stripMargin),
     (s, dir) => {
-      graft.functions.GraftFunctions.ensureQdigest(s)
       val docs = Tables.table(s, dir, "documents")
         .filter(col("n_chars").isNotNull)
       // pass 1: the sketch (n comes exactly from the digest total —
@@ -2593,7 +2592,6 @@ object TextQueries extends QuerySet {
     "qdigest_rollup_deciles",
     qdigestDeciles.oracle,
     (s, dir) => {
-      graft.functions.GraftFunctions.ensureQdigest(s)
       val docs = Tables.table(s, dir, "documents")
         .filter(col("n_chars").isNotNull)
       // the stored-artifact layer: one digest per source…
@@ -2702,7 +2700,6 @@ object TextQueries extends QuerySet {
     * curve at its accuracy knob. */
   def qdigestErrReport(s: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(Int, Long)] = {
-    graft.functions.GraftFunctions.ensureQdigest(s)
     val docs = Tables.table(s, dir, "documents")
       .filter(col("n_chars").isNotNull)
       .select(col("n_chars").cast("long").as("v"), col("doc_id"))

@@ -349,18 +349,13 @@ object GraftBootstrap {
     // endpoint SQL is user-authored — exactly the input ScanBudgetRule
     // exists to guard — so a session arriving without an explicit
     // setting gets the shipped default here. A deployment that set the
-    // key itself (including 0 = off) is respected. Sessions not built
-    // by GraftSession lack the extension-injected rule, so it is also
-    // armed through the public extraOptimizations seam (idempotent: a
-    // pure guard re-running is a no-op, and the seam is only appended
-    // once).
+    // key itself (including 0 = off) is respected. A session built
+    // without GraftFunctions.register gets the kernels and the rule
+    // from install; one built with it already has both.
     if (spark.conf.getOption(graft.plans.ScanBudgetRule.ConfKey).isEmpty)
       spark.conf.set(graft.plans.ScanBudgetRule.ConfKey,
         graft.plans.ScanBudgetRule.DefaultBudget.toString)
-    if (!spark.experimental.extraOptimizations
-        .exists(_ eq graft.plans.ScanBudgetRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.ScanBudgetRule
+    graft.functions.GraftFunctions.install(spark)
     val (project, endpoints, templateDir) = loadProject(spark, Paths.get(projectYaml))
     val (basic, jwt, oidc, anyAuth) = authProviders(endpoints)
     val allConnProps = project.connections

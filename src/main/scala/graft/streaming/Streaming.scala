@@ -188,8 +188,8 @@ object Streaming {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           // micro-batch frames run on a cloned session: make sure the
-          // native fns (minhash_sig) resolve there too
-          graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
+          // native functions (minhash_sig) resolve there too
+          graft.functions.GraftFunctions.install(batch.sparkSession)
           sink(graft.queries.CorpusOpsQueries.matchesVsStanding(
             graft.queries.TextQueries.shingleSetsOf(batch),
             standingBands, standingSh))
@@ -305,7 +305,7 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
+          graft.functions.GraftFunctions.install(batch.sparkSession)
           graft.operators.AnnIndexStore.appendBatch(path,
             graft.queries.EmbeddingQueries.codeBatch(outer, baseDir,
               graft.queries.EmbeddingQueries.prepBatch(batch)))
@@ -346,7 +346,7 @@ object Streaming {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         ledger.runOnce(batchId) {
           if (!batch.isEmpty) {
-            graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
+            graft.functions.GraftFunctions.install(batch.sparkSession)
             mergePartial(graft.queries.TextQueries.cmsPartialOf(batch))
           }
         }
@@ -1128,7 +1128,7 @@ object Streaming {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val ran = ledger.runOnceStateful(batchId) {
           if (!batch.isEmpty) {
-            graft.functions.GraftFunctions.ensureQdigest(batch.sparkSession)
+            graft.functions.GraftFunctions.install(batch.sparkSession)
             val part = graft.functions.QDigest.entriesOfRows(batch
               .select(col(valueCol).cast("long").as("v"))
               .filter(col("v").isNotNull)
@@ -1487,9 +1487,10 @@ object Streaming {
     * family (CMS cells ADD, Bloom bits OR, HLL registers MAX, MG
     * summaries MERGE): each micro-batch's k-entry token summary (the
     * native mg_topk [[graft.functions.MisraGriesTopK]] aggregate,
-    * inherited by the micro-batch clone session from the extension
-    * registry) is handed to the caller, who absorbs it into a standing
-    * summary with [[graft.functions.MisraGriesTopK.mergeInto]] — the
+    * installed on the micro-batch session by
+    * [[graft.functions.GraftFunctions.install]]) is handed to the
+    * caller, who absorbs it into a standing summary with
+    * [[graft.functions.MisraGriesTopK.mergeInto]] — the
     * EXACT mergeable rule, so the no-false-negative guarantee (every
     * token over n/(k+1) of the WHOLE stream survives) holds at any
     * stream length while the artifact stays ≤ k entries. Unlike the
@@ -1518,7 +1519,7 @@ object Streaming {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         ledger.runOnce(batchId) {
           if (!batch.isEmpty) {
-            graft.functions.GraftFunctions.ensureMgTopk(batch.sparkSession)
+            graft.functions.GraftFunctions.install(batch.sparkSession)
             val row = batch
               .select(explode(split(col("text"), " ")).as("term"))
               .agg(expr(s"mg_topk(term, $k)")).collect()(0)
@@ -1551,7 +1552,7 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
+          graft.functions.GraftFunctions.install(batch.sparkSession)
           mergePositions(graft.queries.TextQueries.bloomPositionsOf(batch))
         }
       }
@@ -1681,7 +1682,7 @@ object Streaming {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         ledger.runOnce(batchId) {
           if (!batch.isEmpty) {
-            graft.functions.GraftFunctions.ensureRegistered(batch.sparkSession)
+            graft.functions.GraftFunctions.install(batch.sparkSession)
             // small per batch; three consumers (match, anti-join, bands)
             val docs = batch.localCheckpoint(true)
             val sh = graft.queries.TextQueries.shingleSetsOf(docs)

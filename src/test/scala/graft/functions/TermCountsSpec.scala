@@ -37,6 +37,19 @@ class TermCountsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.getSeq[Any](1).isEmpty)
   }
 
+  test("NULL elements are skipped, folded as a literal or read from a column") {
+    def counts(rows: Array[org.apache.spark.sql.Row]) = rows.toSeq.map(
+      _.getSeq[org.apache.spark.sql.Row](0).map(r => (r.getString(0), r.getLong(1))))
+    val folded = spark.sql("SELECT term_counts(array('a', NULL, 'b', 'a'))").collect()
+    val fromColumn = spark.range(2)
+      .selectExpr("array('a', IF(id < 5, NULL, 'x'), 'b', 'a') AS toks")
+      .selectExpr("term_counts(toks)").collect()
+    assert(counts(folded) == Seq(Seq("a" -> 2L, "b" -> 1L)))
+    assert(counts(fromColumn) == Seq.fill(2)(Seq("a" -> 2L, "b" -> 1L)))
+    assert(counts(spark.sql("SELECT term_counts(array(CAST(NULL AS STRING)))")
+      .collect()) == Seq(Seq.empty))
+  }
+
   test("equals explode + GROUP BY count on the real corpus (uni- and bigrams)") {
     val docs = graft.Tables.table(spark, "/root/testdata/sf0.001", "documents")
     Seq("split(text, ' ')", "word_shingles(text, 2)").foreach { arr =>

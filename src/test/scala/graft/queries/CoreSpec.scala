@@ -34,6 +34,35 @@ class CoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0 until 16).map(i =>
       (((x >> i) & 1L) << (2 * i)) + (((y >> i) & 1L) << (2 * i + 1))).sum
 
+  test("pair_pack skips NULL elements, folded as a literal or read from a column") {
+    val folded = spark.sql("SELECT pair_pack(array(1L, NULL, 3L))").collect()
+    val fromColumn = spark.range(2)
+      .selectExpr("array(1L, IF(id < 5, NULL, 2L), 3L) AS ps")
+      .selectExpr("pair_pack(ps)").collect()
+    (folded ++ fromColumn).foreach(r => assert(r.getSeq[Long](0) == Seq((1L << 32) | 3L)))
+    assert(fromColumn.length == 2)
+  }
+
+  test("q20 takes the HOF fallback when a partkey is outside [0, 2^31)") {
+    val ss = spark
+    import ss.implicits._
+    val big = 1L << 31
+    // orders 1 and 3 hold all three keys, orders 2 and 4 the first two
+    Seq(Seq(big, big + 5, 3L) -> Seq((big, big + 5, 4L), (3L, big, 2L), (3L, big + 5, 2L)),
+        Seq(-9L, -4L, 2L) -> Seq((-9L, -4L, 4L), (-9L, 2L, 2L), (-4L, 2L, 2L))
+    ).foreach { case (keys, expected) =>
+      val dir = java.nio.file.Files.createTempDirectory("q20_sparse_keys").toString
+      keys.toDF("p_partkey").write.parquet(s"$dir/part.parquet")
+      (1L to 4L).flatMap(o => keys.take(if (o % 2 == 1) 3 else 2).map(o -> _))
+        .toDF("l_orderkey", "l_partkey").write.parquet(s"$dir/lineitem.parquet")
+      val df = SparkEntry.queries("q20_basket_pair_counts")(spark, dir)
+      assert(!df.queryExecution.analyzed.toString.contains("pair_pack"),
+        s"keys $keys must not be packed")
+      assert(df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ==
+        expected)
+    }
+  }
+
   test("z-order codes replay exactly and round-trip to their coordinates") {
     val rows = SparkEntry.queries("zorder_layout_key")(spark, sf).collect()
       .map(r => (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))

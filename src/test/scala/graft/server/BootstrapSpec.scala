@@ -584,6 +584,40 @@ class BootstrapSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("serve arms the scan-budget rule once, and not at all on an extension-built session") {
+    val rule = graft.plans.ScanBudgetRule
+    val root = Files.createTempDirectory("graft_rule_once")
+    val sqls = Files.createDirectory(root.resolve("sqls"))
+    Files.writeString(root.resolve("project.yaml"),
+      "project-name: rule-once\ntemplate:\n  path: './sqls'\n")
+    Files.writeString(sqls.resolve("one.yaml"),
+      "url-path: /one\ntemplate-source: one.sql\nwith-pagination: \"false\"\n")
+    Files.writeString(sqls.resolve("one.sql"), "SELECT 1 AS one")
+    def serveOnce(s: SparkSession): Unit =
+      GraftBootstrap.serve(s, root.resolve("project.yaml").toString).stop()
+
+    // this suite's session has no extension: install arms the rule, once
+    serveOnce(spark)
+    serveOnce(spark)
+    assert(spark.experimental.extraOptimizations.count(_ eq rule) == 1)
+
+    // the builder makes a new session on the running context only
+    // once no active/default session is set
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val extended = SparkSession.builder()
+      .withExtensions(graft.functions.GraftFunctions.register)
+      .getOrCreate()
+    try {
+      serveOnce(extended)
+      assert(!extended.experimental.extraOptimizations.exists(_ eq rule),
+        "the extension already injects the rule; a second copy re-walks every plan")
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
   test("a monitor whose source disappears shows a drain-error gauge; others keep updating") {
     val ss = spark
     import ss.implicits._

@@ -415,7 +415,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("corpus ingestion: batch N+1 dedups against what batch N admitted") {
     val ss = spark
     import ss.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(spark)
+    graft.functions.GraftFunctions.install(spark)
     val tmp = Files.createTempDirectory("corpus_ingest")
     val corpus = new SnapshotTable(spark, s"$tmp/wh", "corpus")
     val index = new SnapshotTable(spark, s"$tmp/wh", "band_index")
@@ -462,7 +462,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming incremental dedup equals the batch operator on the same slice (parity)") {
     val dir = "/root/testdata/sf0.001"
-    graft.functions.GraftFunctions.ensureRegistered(spark)
+    graft.functions.GraftFunctions.install(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
     // the gated batch operator's slice: doc_id%5==4 is the incoming
@@ -505,7 +505,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming quality router: accept+reject partition the corpus and match the batch decision") {
     val dir = "/root/testdata/sf0.001"
-    graft.functions.GraftFunctions.ensureRegistered(spark)
+    graft.functions.GraftFunctions.install(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
     val tmp = Files.createTempDirectory("quality_router_stream")
@@ -553,7 +553,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // all-positive-score corpus — the calibration helper must produce
     // an operating point that actually rejects ~the requested budget
     val dir = "/root/testdata/sf0.001"
-    graft.functions.GraftFunctions.ensureRegistered(spark)
+    graft.functions.GraftFunctions.install(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
     val target = 0.25
@@ -586,7 +586,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ANN index ingest stream: streamed vectors land in the pruned cell layout with frozen-quantizer codes") {
     val s2 = spark
     import s2.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(spark)
+    graft.functions.GraftFunctions.install(spark)
     def mkVecs(ids: Range): Seq[(Long, Int, Array[Float])] =
       ids.map(i => (i.toLong, i % 5,
         Array.tabulate(64)(d => ((i * 13 + d * 7) % 19 - 9).toFloat / 9f)))
@@ -648,7 +648,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming MG summaries merge to a no-false-negative standing summary") {
     val dir = "/root/testdata/sf0.001"
-    graft.functions.GraftFunctions.ensureRegistered(spark)
+    graft.functions.GraftFunctions.install(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
     val tmp = Files.createTempDirectory("mg_stream")
@@ -687,7 +687,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("MG stream replay after restart does not inflate standing counts (BatchLedger)") {
     val dir = "/root/testdata/sf0.001"
-    graft.functions.GraftFunctions.ensureRegistered(spark)
+    graft.functions.GraftFunctions.install(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text").limit(200)
     val tmp = Files.createTempDirectory("mg_replay")
@@ -1154,7 +1154,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("quantile monitor: windowed statistic flags a LATE shift the cumulative dilutes; restart-exact") {
     val ss = spark
     import ss.implicits._
-    graft.functions.GraftFunctions.ensureQdigest(spark)
+    graft.functions.GraftFunctions.install(spark)
     val tmp = Files.createTempDirectory("quantile_monitor")
     // baseline window: lengths uniform-ish in [100, 1100)
     val base = (0 until 5000).map(i => 100L + (i.toLong * 37) % 1000)
@@ -1231,7 +1231,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // merge of the store, and the monitor's behavior must be unchanged.
     val ss = spark
     import ss.implicits._
-    graft.functions.GraftFunctions.ensureQdigest(spark)
+    graft.functions.GraftFunctions.install(spark)
     val tmp = Files.createTempDirectory("quantile_store")
     val base = (0 until 5000).map(i => 100L + (i.toLong * 37) % 1000)
     val sorted = base.sorted
@@ -1426,7 +1426,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming cms partials sum to the batch sketch over any micro-batch split") {
     val dir = "/root/testdata/sf0.001"
-    graft.functions.GraftFunctions.ensureRegistered(spark)
+    graft.functions.GraftFunctions.install(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")
     val tmp = Files.createTempDirectory("cms_stream")
@@ -1457,7 +1457,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming bloom positions OR to the batch bitmap, and replay is a no-op") {
     val dir = "/root/testdata/sf0.001"
-    graft.functions.GraftFunctions.ensureRegistered(spark)
+    graft.functions.GraftFunctions.install(spark)
     // reference slice = the decontamination entry's benchmark carve
     val ref = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text").filter(col("doc_id") % 100 === 0)
